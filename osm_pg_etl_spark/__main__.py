@@ -16,6 +16,12 @@ road/complete-graph scripts → igraph analyses → CSV write-back
 filter → impute → topological split/merge → directed expansion pipeline;
 `analyze` runs the native graph algorithms; `export` writes the igraph
 edge-list contract for the single-node long tail.
+
+`ingest` and `tags` write their independent tables as concurrent Spark
+jobs (``_write_tables``), so one table's small tail of tasks does not
+leave the other cores idle. `network` builds ``directed.parquet`` from
+the ``merged.parquet`` it has just written rather than running the
+split/merge plan a second time.
 """
 
 from __future__ import annotations
@@ -31,6 +37,40 @@ def _spark(app: str):
     return s
 
 
+def _write_tables(spark, tables: dict, out: str) -> None:
+    """Write each DataFrame to ``out/<name>.parquet``, all as concurrent
+    Spark jobs (one thread per table).
+
+    Every thread inherits the caller's job group, description and tags
+    (``inheritable_thread_target``), so the jobs stay attributed to the
+    calling step. All writes run to the end; then the ``wrote`` lines of
+    the tables written print in table order, and the first failure in
+    table order is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def write(name: str, df) -> None:
+        df.write.mode("overwrite").parquet(f"{out}/{name}.parquet")
+
+    # wrapped once per table: each wrap clones the caller's properties, and
+    # a thread sets the clone itself as its own — one clone shared by all
+    # threads would leak one write's SQL execution id into the others
+    with ThreadPoolExecutor(max_workers=max(1, len(tables))) as pool:
+        futures = {name: pool.submit(inheritable_thread_target(spark)(write),
+                                     name, df)
+                   for name, df in tables.items()}
+    error = None
+    for name, future in futures.items():
+        exc = future.exception()
+        if exc is None:
+            print(f"wrote {out}/{name}.parquet")
+        elif error is None:
+            error = exc
+    if error is not None:
+        raise error
+
+
 def cmd_ingest(args: argparse.Namespace) -> None:
     from .sources.pbf import assemble_linestrings, read_pbf
 
@@ -40,9 +80,7 @@ def cmd_ingest(args: argparse.Namespace) -> None:
     tables = {"nodes": nodes, "ways": ways,
               "way_nodes": read_pbf(spark, args.pbf, "way_nodes"),
               "relations": read_pbf(spark, args.pbf, "relations")}
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{args.out}/{name}.parquet")
-        print(f"wrote {args.out}/{name}.parquet")
+    _write_tables(spark, tables, args.out)
 
 
 def cmd_tags(args: argparse.Namespace) -> None:
@@ -51,10 +89,8 @@ def cmd_tags(args: argparse.Namespace) -> None:
 
     spark = _spark("tags")
     d = read_osm(spark, args.osm_dir, ("nodes", "ways"))
-    cat = tags_summary_catalog(d["nodes"], d["ways"])
-    for name, df in cat.items():
-        df.write.mode("overwrite").parquet(f"{args.out}/{name}.parquet")
-    print(f"wrote {len(cat)} tags_summary tables to {args.out}")
+    _write_tables(spark, tags_summary_catalog(d["nodes"], d["ways"]),
+                  args.out)
 
 
 def cmd_network(args: argparse.Namespace) -> None:
@@ -73,7 +109,9 @@ def cmd_network(args: argparse.Namespace) -> None:
         net = with_mode_flags(complete_network(d["ways"]).cache(), tag=F.col)
     merged = merged_network(net, d["way_nodes"])
     merged.write.mode("overwrite").parquet(f"{args.out}/merged.parquet")
-    directed = directed_network(merged, minimal=args.minimal)
+    directed = directed_network(
+        spark.read.parquet(f"{args.out}/merged.parquet"),
+        minimal=args.minimal)
     directed.write.mode("overwrite").parquet(f"{args.out}/directed.parquet")
     print(f"wrote {args.out}/merged.parquet and directed.parquet")
 

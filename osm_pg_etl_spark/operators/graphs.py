@@ -52,7 +52,9 @@ def directed_network(merged: DataFrame, minimal: bool = False) -> DataFrame:
     the output only when present on ``merged`` — direction logic reads
     only oneway/highway, and node-list reversal only applies when there
     is a node list. Full-width inputs produce the exact EDGE_COLUMNS
-    shape as before.
+    shape as before. length, speed_limit, highway and oneway are always
+    selected, so a merged table missing one raises ``AnalysisException``
+    instead of yielding a narrower directed table.
     """
     two_way = (F.col("oneway").isNull() | (F.col("oneway") == "no")) \
         & (F.col("highway") != "motorway")
@@ -88,7 +90,7 @@ def directed_network(merged: DataFrame, minimal: bool = False) -> DataFrame:
         cols.append(F.when(fwd, F.col("nodes"))
                     .otherwise(array_reverse("nodes")).alias("nodes"))
     cols += [F.col(c) for c in ("length", "speed_limit", "highway",
-                                "oneway") if c in merged.columns]
+                                "oneway")]
     if "geom" in merged.columns:
         cols.append(F.col("geom"))
     return base.select(*cols)

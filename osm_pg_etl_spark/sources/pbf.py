@@ -19,14 +19,19 @@ framing is exactly what a distributed scan wants:
   cluster ingests a planet file with no driver bottleneck and no shuffle.
 
 Decoding is dependency-free: protobuf wire format is ~40 lines of varint
-walking, zlib is stdlib, and the hot loops (packed sint64 delta columns in
-``DenseNodes``/``Way.refs``) are numpy-vectorized — per-byte work happens in
-C, not the Python interpreter.
+walking, zlib is stdlib, and the per-value work is numpy-vectorized. Each
+block decodes to one pandas frame: the packed sint64 delta columns of
+``DenseNodes`` decode once per group, and a block's Way/Relation messages
+are only sliced in Python — all their ``keys``/``vals``/``refs``/member
+buffers of one kind are joined and decoded in a single numpy pass, with
+per-message delta restarts, ``np.repeat`` for parent ids and per-message
+positions for ``sequence_id``. Per-byte work happens in C, not the Python
+interpreter.
 
-This module makes the engine's S1 self-contained; ``etl/pbf_to_parquet.py``
-(libosmium-based) remains the recommended one-shot converter where pyosmium
-is installed, since parquet lands column stats + predicate pushdown that a
-raw PBF scan cannot offer.
+This module is the engine's S1 and what the CLI's ``ingest`` step runs.
+``etl/pbf_to_parquet.py`` is an older libosmium converter to the same
+layout; it needs the ``osmium`` package, which the engine does not depend
+on.
 
 ``write_pbf`` is the matching minimal encoder (dense nodes, ways,
 relations) so the reader is round-trip testable without network access and
@@ -37,6 +42,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from itertools import islice
 from typing import Iterable, Iterator
 
 import numpy as np
@@ -296,53 +302,123 @@ def _decode_dense(mv, blk: _Block) -> pd.DataFrame:
     return df
 
 
-def _decode_entity_rows(mv, blk: _Block, kind: str) -> dict:
-    """Shared Node(non-dense)/Way/Relation message walk → dict of columns."""
-    row = {"id": None, "version": None, "user_id": None, "tstamp": None,
-           "changeset_id": None, "keys": (), "vals": ()}
-    refs = memids = roles = types = None
-    lat = lon = None
-    for field, wire, val in _iter_fields(bytes(mv)):
-        if field == 1:
-            row["id"] = _unzigzag(np.array([val], np.uint64))[0] \
-                if kind == "node" else val
-        elif field == 2:
-            row["keys"] = _decode_packed_uint(val)
-        elif field == 3:
-            row["vals"] = _decode_packed_uint(val)
-        elif field == 4:
-            inf = _parse_info(val, blk.date_gran)
-            row["version"] = inf["version"]
-            row["user_id"] = inf["uid"]
-            row["tstamp"] = inf["timestamp"]
-            row["changeset_id"] = inf["changeset"]
-        elif field == 8:
-            if kind == "node":
-                lat = _unzigzag(np.array([val], np.uint64))[0]
-            elif kind == "way":
-                refs = np.cumsum(_decode_packed_sint(val))
-            else:
-                roles = _decode_packed_uint(val)
-        elif field == 9:
-            if kind == "node":
-                lon = _unzigzag(np.array([val], np.uint64))[0]
-            else:
-                memids = np.cumsum(_decode_packed_sint(val))
-        elif field == 10 and kind == "relation":
-            types = _decode_packed_uint(val)
+def _decode_runs(bufs: list) -> tuple[np.ndarray, np.ndarray]:
+    """Many packed-varint buffers (one per message) → (all values, value
+    count per buffer), in one numpy decode. A varint ends at every byte
+    with the high bit clear and a well-formed buffer ends on one, so the
+    per-buffer counts of such bytes split the joined decode exactly; a
+    buffer that stops mid-varint raises instead of bleeding into the next."""
+    joined = b"".join(bufs)
+    lens = np.fromiter(map(len, bufs), np.int64, len(bufs))
+    ends = np.cumsum(lens)
+    term = np.frombuffer(joined, np.uint8) < 0x80
+    if not term[ends[lens > 0] - 1].all():
+        raise ValueError("packed varint field truncated mid-value")
+    seen = np.concatenate(([0], np.cumsum(term)))
+    return _decode_packed_uint(joined), seen[ends] - seen[ends - lens]
+
+
+def _run_starts(counts: np.ndarray) -> np.ndarray:
+    return np.cumsum(counts) - counts
+
+
+def _run_cumsum(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Delta decode restarted at every run (each message's delta-coded
+    field starts from zero). Wrapping int64 arithmetic is exact here."""
+    total = np.concatenate(([0], np.cumsum(deltas)))
+    return total[1:] - np.repeat(total[_run_starts(counts)], counts)
+
+
+def _run_positions(counts: np.ndarray) -> np.ndarray:
+    """0-based position of every value inside its run (sequence_id)."""
+    return (np.arange(int(counts.sum()), dtype=np.int64)
+            - np.repeat(_run_starts(counts), counts))
+
+
+def _info_column(values: list, tstamp: bool = False):
+    """One Info field over a block: all present → int64 (or
+    datetime64[ns] for timestamps, NaT where absent); any absent → object
+    with None, so a missing value never turns int64 ids into floats."""
+    present = [v is not None for v in values]
+    if tstamp and any(present):
+        ms = np.array([v if v is not None else "NaT" for v in values],
+                      "datetime64[ms]")
+        return ms.astype("datetime64[ns]")
+    if all(present):
+        return np.array(values, np.int64)
+    return np.array(values, dtype=object)
+
+
+def _unzigzag_int(v: int) -> int:
+    return (v >> 1) ^ -(v & 1)
+
+
+# packed fields collected per message, by entity kind (OSMPBF Way.refs;
+# Relation.roles_sid / memids / types)
+_PACKED = {"node": (), "way": (8,), "relation": (8, 9, 10)}
+
+
+def _decode_messages(msgs: list, blk: _Block, kind: str):
+    """Plain Node / Way / Relation messages of one block → (frame of the
+    common columns plus node lat/lon, {packed field: (values, counts)}).
+
+    The Python loop only slices each message's fields; every packed field
+    of one kind is decoded in a single numpy pass over the whole block."""
+    ids, keys, vals = [], [], []
+    info: dict[str, list] = {c: [] for c in ("version", "user_id",
+                                             "tstamp", "changeset_id")}
+    packed: dict[int, list] = {f: [] for f in _PACKED[kind]}
+    lats, lons = [], []
+    for mv in msgs:
+        k = v = b""
+        mp = {f: b"" for f in packed}
+        inf = None
+        lat = lon = 0
+        for field, _, val in _iter_fields(bytes(mv)):
+            if field == 1:
+                ids.append(_unzigzag_int(val) if kind == "node" else val)
+            elif field == 2:
+                k += val           # packed fields may be chunk-split
+            elif field == 3:
+                v += val
+            elif field == 4:
+                inf = _parse_info(val, blk.date_gran)
+            elif kind == "node" and field in (8, 9):
+                if field == 8:
+                    lat = _unzigzag_int(val)
+                else:
+                    lon = _unzigzag_int(val)
+            elif field in mp:
+                mp[field] += val
+        keys.append(k)
+        vals.append(v)
+        for f, b in mp.items():
+            packed[f].append(b)
+        info["version"].append(inf and inf["version"])
+        info["user_id"].append(inf and inf["uid"])
+        info["changeset_id"].append(inf and inf["changeset"])
+        info["tstamp"].append(inf and inf["timestamp"])
+        lats.append(lat)
+        lons.append(lon)
+    key_ids, n_keys = _decode_runs(keys)
+    val_ids, n_vals = _decode_runs(vals)
+    if not np.array_equal(n_keys, n_vals):
+        raise ValueError(f"{kind} message with unequal keys/vals counts")
     s = blk.strings
-    row["tags"] = dict(zip((s[k] for k in row.pop("keys")),
-                           (s[v] for v in row.pop("vals"))))
+    pairs = zip([s[i] for i in key_ids.tolist()],
+                [s[i] for i in val_ids.tolist()])
+    df = pd.DataFrame({
+        "id": np.array(ids, np.int64),
+        "version": _info_column(info["version"]),
+        "user_id": _info_column(info["user_id"]),
+        "tstamp": _info_column(info["tstamp"], tstamp=True),
+        "changeset_id": _info_column(info["changeset_id"]),
+        "tags": [dict(islice(pairs, n)) for n in n_keys.tolist()],
+    })
     if kind == "node":
-        row["lat"] = float(blk.coord(np.array([lat or 0]), blk.lat_off)[0])
-        row["lon"] = float(blk.coord(np.array([lon or 0]), blk.lon_off)[0])
-    elif kind == "way":
-        row["refs"] = refs if refs is not None else np.empty(0, np.int64)
-    else:
-        row["memids"] = memids if memids is not None else np.empty(0, np.int64)
-        row["roles"] = roles if roles is not None else np.empty(0, np.uint64)
-        row["types"] = types if types is not None else np.empty(0, np.uint64)
-    return row
+        df["lon"] = blk.coord(np.array(lons, np.int64), blk.lon_off)
+        df["lat"] = blk.coord(np.array(lats, np.int64), blk.lat_off)
+    return df, {f: _decode_runs(b) for f, b in packed.items()}
 
 
 _GROUP_FIELD = {"nodes": 1, "ways": 3, "relations": 4}
@@ -390,52 +466,69 @@ def _users_from_block(blk: _Block) -> pd.DataFrame:
 
 
 def decode_block(data: bytes, entity: str) -> pd.DataFrame:
-    """Uncompressed PrimitiveBlock bytes → pandas frame in pgsnapshot
+    """Uncompressed PrimitiveBlock bytes → one pandas frame in pgsnapshot
     layout. ``entity`` ∈ nodes | ways | way_nodes | relations |
-    relation_members (way/relation members come from the same messages as
-    their parents, so each is one decode pass)."""
+    relation_members | users (way/relation members come from the same
+    messages as their parents, so each is one decode pass)."""
     blk = _Block(data)
     if entity == "users":
         return _users_from_block(blk)
-    frames: list[pd.DataFrame] = []
     want = {"way_nodes": "ways", "relation_members": "relations"}.get(
         entity, entity)
+    kind = want[:-1]
+    # message order is kept: plain node runs and DenseNodes groups may
+    # interleave, every other kind decodes as one run per block
+    parts: list[pd.DataFrame] = []
+    msgs: list = []
     for grp in blk.groups:
         for field, _, val in _iter_fields(bytes(grp)):
-            if field == 2 and want == "nodes":          # DenseNodes
-                frames.append(_decode_dense(val, blk))
-            elif field == _GROUP_FIELD.get(want):
-                kind = {"nodes": "node", "ways": "way",
-                        "relations": "relation"}[want]
-                frames.append(pd.DataFrame(
-                    [_decode_entity_rows(val, blk, kind)]))
-    if not frames:
+            if field == _GROUP_FIELD[want]:
+                msgs.append(val)
+            elif field == 2 and want == "nodes":          # DenseNodes
+                if msgs:
+                    parts.append(_decode_messages(msgs, blk, kind)[0])
+                    msgs = []
+                parts.append(_decode_dense(val, blk))
+    if want == "nodes":
+        if msgs:
+            parts.append(_decode_messages(msgs, blk, kind)[0])
+        if not parts:
+            return _empty(entity)
+        return pd.concat(parts, ignore_index=True)[
+            [f.name for f in S.NODES.fields]]
+    if not msgs:
         return _empty(entity)
-    df = pd.concat(frames, ignore_index=True)
-    if entity == "way_nodes":
-        return pd.DataFrame(
-            [(i, int(r), int(seq))
-             for i, refs in zip(df["id"], df["refs"])
-             for seq, r in enumerate(refs)],
-            columns=["way_id", "node_id", "sequence_id"]) \
-            if len(df) else _empty(entity)
-    if entity == "relation_members":
-        return pd.DataFrame(
-            [(i, int(m), _MEMBER_TYPES[int(t)], blk.strings[int(ro)], seq)
-             for i, ms, ros, ts in zip(df["id"], df["memids"], df["roles"],
-                                       df["types"])
-             for seq, (m, ro, t) in enumerate(zip(ms, ros, ts))],
-            columns=["relation_id", "member_id", "member_type",
-                     "member_role", "sequence_id"]) \
-            if len(df) else _empty(entity)
-    if entity == "ways":
-        df = df.rename(columns={"refs": "nodes"})
-        df["nodes"] = [np.asarray(v, dtype=np.int64) for v in df["nodes"]]
+    df, packed = _decode_messages(msgs, blk, kind)
+    if want == "ways":
+        refs, n_refs = packed[8]
+        refs = _run_cumsum(_unzigzag(refs), n_refs)
+        if entity == "way_nodes":
+            if not len(refs):
+                return _empty(entity)
+            return pd.DataFrame({
+                "way_id": np.repeat(df["id"].to_numpy(), n_refs),
+                "node_id": refs,
+                "sequence_id": _run_positions(n_refs)})
+        df["nodes"] = pd.Series(np.split(refs, np.cumsum(n_refs)[:-1]),
+                                dtype=object)
         df["linestring"] = None      # assembled from the nodes table later
-        cols = [f.name for f in S.WAYS.fields]
-    else:
-        cols = [f.name for f in S.OSM_SCHEMAS[entity].fields]
-    return df[cols]
+        return df
+    if entity == "relations":
+        return df
+    (roles, n_roles), (memids, n_mem), (types, n_types) = (
+        packed[8], packed[9], packed[10])
+    if not (np.array_equal(n_roles, n_mem)
+            and np.array_equal(n_types, n_mem)):
+        raise ValueError("relation with unequal memids/roles/types counts")
+    if not len(memids):
+        return _empty(entity)
+    s = blk.strings
+    return pd.DataFrame({
+        "relation_id": np.repeat(df["id"].to_numpy(), n_mem),
+        "member_id": _run_cumsum(_unzigzag(memids), n_mem),
+        "member_type": _MEMBER_TYPES[types.astype(np.intp)].astype(object),
+        "member_role": [s[i] for i in roles.tolist()],
+        "sequence_id": _run_positions(n_mem)})
 
 
 # ---------------------------------------------------------------------------

@@ -196,8 +196,23 @@ def osm(spark):
 # driver's verify window. `-m ""` runs everything. A stale entry (renamed
 # test) simply stops matching — the test safely returns to the default
 # profile. Node ids given explicitly on the command line are not marked,
-# so `pytest tests/test_x.py::test_y` always runs what you asked for.
+# so `pytest tests/test_x.py::test_y` always runs what you asked for —
+# also from inside tests/ or with an absolute path.
 # ---------------------------------------------------------------------------
+def explicit_node_ids(args, invocation_dir, rootdir) -> set[str]:
+    """Command-line node ids (``path::name``) rewritten relative to the
+    rootdir, the form ``item.nodeid`` takes whatever the cwd was."""
+    out = set()
+    for arg in args:
+        if "::" not in arg:
+            continue
+        path, rest = arg.split("::", 1)
+        full = os.path.join(str(invocation_dir), path)
+        rel = os.path.relpath(full, str(rootdir)).replace(os.sep, "/")
+        out.add(f"{rel}::{rest}")
+    return out
+
+
 def pytest_collection_modifyitems(config, items):
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "slow_tests.txt")
@@ -206,7 +221,8 @@ def pytest_collection_modifyitems(config, items):
     with open(path) as fh:
         slow = {ln.strip() for ln in fh if ln.strip()
                 and not ln.startswith("#")}
-    explicit = {a for a in config.args if "::" in a}
+    explicit = explicit_node_ids(config.args, config.invocation_params.dir,
+                                 config.rootpath)
     for item in items:
         nodeid = item.nodeid
         base = nodeid.split("[", 1)[0]

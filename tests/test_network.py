@@ -64,6 +64,20 @@ def test_directed_expansion_3vl(osm):
     assert directed.count() == 20
 
 
+@pytest.mark.parametrize("missing", ["oneway", "length"])
+def test_directed_network_rejects_narrow_merged(osm, missing):
+    """A merged table without one of the attribute columns must fail at
+    analysis, not produce a narrower directed table (tags/nodes/geom stay
+    optional for the geometry-free projection)."""
+    from pyspark.errors import AnalysisException
+
+    merged = merged_network(car_network(osm["ways"]), osm["way_nodes"])
+    with pytest.raises(AnalysisException):
+        directed_network(merged.drop(missing))
+    assert "oneway" in directed_network(
+        merged.drop("tags", "nodes", "geom")).columns
+
+
 def test_network_nodes_endpoints_only(osm):
     merged = merged_network(car_network(osm["ways"]), osm["way_nodes"])
     nn = network_nodes(osm["nodes"], merged)

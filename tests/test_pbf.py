@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime as dt
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from osm_pg_etl_spark.sources import pbf
@@ -239,3 +240,263 @@ def test_chunk_split_packed_fields():
 
     users = pbf.decode_block(block, "users")
     assert users["id"].tolist() == [7, 42]
+
+
+# ---------------------------------------------------------------------------
+# decode_block against a pure-Python reference decoder: values and dtypes
+# ---------------------------------------------------------------------------
+
+
+def _ref_varint(buf: bytes, pos: int) -> tuple[int, int]:
+    out = shift = 0
+    while True:
+        b = buf[pos]
+        pos += 1
+        out |= (b & 0x7F) << shift
+        if b < 0x80:
+            return out, pos
+        shift += 7
+
+
+def _ref_fields(buf: bytes):
+    pos = 0
+    while pos < len(buf):
+        key, pos = _ref_varint(buf, pos)
+        if key & 7 == 0:
+            val, pos = _ref_varint(buf, pos)
+        else:                                   # length-delimited
+            n, pos = _ref_varint(buf, pos)
+            val, pos = bytes(buf[pos:pos + n]), pos + n
+        yield key >> 3, val
+
+
+def _ref_packed(buf: bytes) -> list[int]:
+    out, pos = [], 0
+    while pos < len(buf):
+        v, pos = _ref_varint(buf, pos)
+        out.append(v)
+    return out
+
+
+def _ref_deltas(values: list[int]) -> list[int]:
+    out, acc = [], 0
+    for v in values:
+        acc += (v >> 1) ^ -(v & 1)
+        out.append(acc)
+    return out
+
+
+def _ref_column(values: list, tstamp: bool = False):
+    """The reader's dtype contract for one column of a block."""
+    if tstamp and any(v is not None for v in values):
+        return pd.to_datetime([v if v is not None else pd.NaT
+                               for v in values], unit="ms").as_unit("ns")
+    if values and all(v is not None for v in values):
+        return np.array(values, np.int64)
+    return pd.array(values, dtype=object)
+
+
+def _ref_decode(block: bytes, entity: str) -> pd.DataFrame:
+    """Way/Relation messages of a PrimitiveBlock, decoded one value at a
+    time in plain Python, in the pgsnapshot layout of ``decode_block``."""
+    strings, groups, gran = [], [], 1000
+    for f, v in _ref_fields(block):
+        if f == 1:
+            strings = [s.decode() for g, s in _ref_fields(v) if g == 1]
+        elif f == 2:
+            groups.append(v)
+        elif f == 18:
+            gran = v
+    parent = {"way_nodes": "ways", "relation_members": "relations"}.get(
+        entity, entity)
+    msgs = [m for g in groups for f, m in _ref_fields(g)
+            if f == {"ways": 3, "relations": 4}[parent]]
+    ents = []
+    for m in msgs:
+        e = {"keys": [], "vals": [], "info": {}, 8: [], 9: [], 10: []}
+        for f, v in _ref_fields(m):
+            if f == 1:
+                e["id"] = v
+            elif f in (2, 3):
+                e["keys" if f == 2 else "vals"] += _ref_packed(v)
+            elif f == 4:
+                e["info"] = dict(_ref_fields(v))
+            elif f in (8, 9, 10):
+                e[f] += _ref_packed(v)
+        ents.append(e)
+    if entity == "way_nodes":
+        rows = [(e["id"], n, i) for e in ents
+                for i, n in enumerate(_ref_deltas(e[8]))]
+        cols = ["way_id", "node_id", "sequence_id"]
+    elif entity == "relation_members":
+        rows = [(e["id"], m, "NWR"[t], strings[r], i) for e in ents
+                for i, (m, t, r) in enumerate(zip(
+                    _ref_deltas(e[9]), e[10], e[8]))]
+        cols = ["relation_id", "member_id", "member_type", "member_role",
+                "sequence_id"]
+    else:
+        info = [e["info"] for e in ents]
+        ts = [i[2] * gran if 2 in i else None for i in info]
+        df = pd.DataFrame({
+            "id": _ref_column([e["id"] for e in ents]),
+            "version": _ref_column([i.get(1) for i in info]),
+            "user_id": _ref_column([i.get(4) for i in info]),
+            "tstamp": _ref_column(ts, tstamp=True),
+            "changeset_id": _ref_column([i.get(3) for i in info]),
+            "tags": [{strings[k]: strings[v]
+                      for k, v in zip(e["keys"], e["vals"])} for e in ents]})
+        if parent == "ways" and len(df):
+            df["nodes"] = pd.Series([np.array(_ref_deltas(e[8]), np.int64)
+                                     for e in ents], dtype=object)
+            df["linestring"] = None
+        return df if len(df) else _ref_empty(entity)
+    if not rows:
+        return _ref_empty(entity)
+    return pd.DataFrame({c: _ref_column(list(v)) if c not in (
+        "member_type", "member_role") else pd.array(v, dtype=object)
+        for c, v in zip(cols, zip(*rows))})
+
+
+def _ref_empty(entity: str) -> pd.DataFrame:
+    return pd.DataFrame({f.name: pd.Series(dtype=object)
+                         for f in pbf.S.OSM_SCHEMAS[entity].fields})
+
+
+def _assert_frames_identical(got: pd.DataFrame, want: pd.DataFrame):
+    assert list(got.columns) == list(want.columns)
+    assert got.dtypes.to_dict() == want.dtypes.to_dict()
+    assert len(got) == len(want)
+    for c in want.columns:
+        for g, w in zip(got[c], want[c]):
+            if isinstance(w, np.ndarray):
+                assert isinstance(g, np.ndarray) and g.dtype == w.dtype
+                assert g.tolist() == w.tolist(), c
+            elif w is None or w is pd.NaT:
+                assert g is w or pd.isna(g), c
+            else:
+                assert g == w, (c, g, w)
+
+
+def _blocks(path: str) -> list[bytes]:
+    with open(path, "rb") as fh:
+        raw = fh.read()
+    return [pbf._decompress_blob(raw[off:off + sz])
+            for t, off, sz in pbf.blob_index(path) if t == "OSMData"]
+
+
+_BIG = 2**32 + 12345
+
+
+def _random_ways(seed: int, n: int) -> list[dict]:
+    """Ways with ids above 2^32, refs jumping up and down (negative
+    deltas), 0 refs, one ref, long ref lists, no tags, and Info present,
+    absent or partial."""
+    rng = np.random.default_rng(seed)
+    ways = []
+    for i in range(n):
+        size = int(rng.choice([0, 1, 2, 5, 40, 300]))
+        refs = (rng.integers(1, 2**40, size) if i % 2
+                else _BIG + rng.integers(-500, 500, size)).tolist()
+        w = {"id": _BIG + 7 * i, "nodes": refs,
+             "tags": ({} if i % 3 == 0 else
+                      {"highway": f"h{i % 4}", "name": f"n{i}"})}
+        if i % 4 == 1:
+            w.update(version=i, user_id=i % 9 + 1, changeset_id=2**33 + i,
+                     tstamp=TS + dt.timedelta(seconds=i))
+        elif i % 4 == 2:
+            w.update(version=1)
+        ways.append(w)
+    return ways
+
+
+def _random_relations(seed: int, n: int) -> list[dict]:
+    rng = np.random.default_rng(seed)
+    rels = []
+    for i in range(n):
+        k = int(rng.choice([0, 1, 3, 60]))
+        rels.append({
+            "id": _BIG + i, "tags": {} if i % 2 else {"type": "route"},
+            "members": [(int(rng.integers(1, 2**36)), "NWR"[j % 3],
+                         ["", "outer", "stop"][j % 3]) for j in range(k)]})
+    return rels
+
+
+@pytest.mark.parametrize("seed,per_block", [(1, 1000), (2, 7), (3, 1)])
+def test_decode_block_matches_reference(tmp_path, seed, per_block):
+    ways = _random_ways(seed, 120)
+    rels = _random_relations(seed, 30)
+    p = str(tmp_path / "ref.osm.pbf")
+    pbf.write_pbf(p, ways=ways, relations=rels, entities_per_block=per_block)
+    got_nodes = []
+    for block in _blocks(p):
+        for entity in ("ways", "way_nodes", "relations", "relation_members"):
+            want = _ref_decode(block, entity)
+            _assert_frames_identical(pbf.decode_block(block, entity), want)
+            if entity == "ways":
+                got_nodes += [n.tolist() for n in want.get("nodes", [])]
+    # the reference itself round-trips the encoder's input
+    assert got_nodes == [w["nodes"] for w in ways]
+
+
+def _mixed_block(ways: list[dict], rels: list[dict]) -> bytes:
+    """One PrimitiveBlock holding a DenseNodes group, a plain Node, ways
+    and relations in interleaved groups (the spec allows any kinds)."""
+    st = pbf._StringTable()
+
+    def entity(num: int, e: dict, extra: bytes) -> bytes:
+        body = (pbf._field(1, 0) + pbf._varint(e["id"])
+                + pbf._encode_tags(e.get("tags") or {}, st)
+                + pbf._bytes_field(4, pbf._encode_info(e, st, 1000)) + extra)
+        return pbf._bytes_field(num, body)
+
+    def way(e: dict) -> bytes:
+        return entity(3, e, pbf._packed(8, pbf._delta(e["nodes"]),
+                                        zigzag=True))
+
+    def rel(e: dict) -> bytes:
+        ms = e["members"]
+        return entity(4, e, pbf._packed(8, [st.add(r) for _, _, r in ms])
+                      + pbf._packed(9, pbf._delta([m for m, _, _ in ms]),
+                                    zigzag=True)
+                      + pbf._packed(10, ["NWR".index(t) for _, t, _ in ms]))
+
+    kv = [st.add("amenity"), st.add("cafe"), 0, 0]
+    dense = pbf._bytes_field(2, pbf._packed(1, pbf._delta([3, 2]), zigzag=True)
+                             + pbf._packed(8, [0, 2], zigzag=True)
+                             + pbf._packed(9, [0, 4], zigzag=True)
+                             + pbf._packed(10, kv))
+    plain = pbf._bytes_field(1, pbf._field(1, 0) + pbf._varint(pbf._zigzag(-9))
+                             + pbf._field(8, 0) + pbf._varint(pbf._zigzag(5))
+                             + pbf._field(9, 0) + pbf._varint(pbf._zigzag(7)))
+    groups = [dense, b"".join(map(way, ways[:3])), b"".join(map(rel, rels)),
+              plain, b"".join(map(way, ways[3:]))]
+    return (pbf._bytes_field(1, st.encode())
+            + b"".join(pbf._bytes_field(2, g) for g in groups))
+
+
+def test_decode_block_mixed_entity_kinds():
+    ways, rels = _random_ways(5, 6), _random_relations(5, 4)
+    block = _mixed_block(ways, rels)
+    for entity in ("ways", "way_nodes", "relations", "relation_members"):
+        _assert_frames_identical(pbf.decode_block(block, entity),
+                                 _ref_decode(block, entity))
+    assert pbf.decode_block(block, "ways")["id"].tolist() == [
+        w["id"] for w in ways]
+    nodes = pbf.decode_block(block, "nodes")
+    assert nodes["id"].tolist() == [3, 2, -9]           # message order
+    assert nodes["tags"].tolist() == [{"amenity": "cafe"}, {}, {}]
+    assert nodes["lat"].tolist() == pytest.approx([0.0, 2e-7, 5e-7])
+    assert nodes["lon"].tolist() == pytest.approx([0.0, 4e-7, 7e-7])
+
+
+def test_decode_block_rejects_truncated_refs():
+    """A refs field that stops mid-varint raises instead of merging into
+    the next way's refs."""
+    st = pbf._StringTable()
+    cut = pbf._bytes_field(8, pbf._varint(pbf._zigzag(300))[:-1])
+    ok = pbf._packed(8, [2])
+    group = (pbf._bytes_field(3, pbf._field(1, 0) + pbf._varint(1) + cut)
+             + pbf._bytes_field(3, pbf._field(1, 0) + pbf._varint(2) + ok))
+    block = pbf._bytes_field(1, st.encode()) + pbf._bytes_field(2, group)
+    with pytest.raises(ValueError, match="truncated"):
+        pbf.decode_block(block, "way_nodes")
